@@ -11,10 +11,13 @@ does not ship it — SURVEY.md §7).
 Scale notes:
 - append/overwrite go straight through the DataFrame writer with
   optional ``partitionBy`` — no driver materialization ever.
-- merge without Delta is a staged rewrite: merged relation written to a
-  staging dir, then promoted with a metadata-only rename. At 100 TB the
-  right backend is Delta/Iceberg (file-level rewrite); the staged
-  rewrite is the dependency-free fallback with identical semantics.
+- merge without Delta is a staged rewrite: the merged relation (one
+  full outer join of target and source on the merge keys, so the whole
+  target is read and shuffled once) is written to a staging dir, then
+  promoted with a metadata-only rename. It is O(table) per merge: at
+  100 TB the right backend is Delta/Iceberg (file-level rewrite) or the
+  bucket-pruned ``merge_upsert_bucketed``; the staged rewrite is the
+  dependency-free fallback with identical semantics.
 - streaming uses the file-source + availableNow trigger (OSS equivalent
   of Auto Loader's incremental listing, framework.py:177-209) with a
   schema registry for evolution.

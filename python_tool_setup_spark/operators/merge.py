@@ -17,10 +17,10 @@ Delta raises on multiple source rows matching one target row; we expose
 ``source_dedup_order`` to make the source unique per key first
 (deterministically), or raise like Delta when duplicates remain.
 
-Scale: one shuffle each side on the merge keys (anti-join + union);
-no full materialization of either side on the driver. Null-key source
-rows never match (SQL equality), so like Delta they fall through to the
-insert branch; null-key target rows are always kept.
+Plan: ONE full outer equi-join on the merge keys — each input scanned
+once, one shuffle each side, nothing materialized on the driver. Null
+keys never match (SQL equality): like Delta, null-key source rows fall
+through to the insert branch and null-key target rows are kept.
 """
 
 from __future__ import annotations
@@ -29,6 +29,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from python_tool_setup_spark.operators.relational import dedup_by_keys
+
+MERGE_MARKER = "__merge_src"
 
 
 class MergeKeyError(ValueError):
@@ -59,10 +63,16 @@ def merge_upsert(
     behavior for a source that ADDS columns: the target gains each new
     column (null for pre-existing rows), then the merge proceeds on the
     widened schema. The source must carry every target column.
-    """
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
 
+    Cost trade-off: each input is scanned once, but whole target rows
+    (not just their keys) are shuffled on the keys — a keys-only
+    anti-join plan shuffles less yet scans the target three times.
+    Either way it is an O(table) rewrite; at scale use
+    :func:`merge_upsert_bucketed` or Delta.
+    """
     keys = list(keys)
+    if MERGE_MARKER in target.columns or MERGE_MARKER in source.columns:
+        raise MergeKeyError(f"column {MERGE_MARKER!r} is reserved for merge_upsert")
     if evolve_schema:
         missing = [c for c in target.columns if c not in source.columns]
         if missing:
@@ -89,18 +99,25 @@ def merge_upsert(
                 "pass source_dedup_order or pre-aggregate"
             )
 
-    # Null-safe NOT: plain anti-join already treats null keys as
-    # non-matching, matching SQL MERGE ON equality semantics.
-    untouched_target = target.join(source.select(*keys), on=keys, how="left_anti")
-    # "update all" rewrites EVERY matched target row with its source
-    # row — duplicate-key target rows each survive as one updated copy
-    # (Delta/SQL MERGE preserves target multiplicity; only duplicate
-    # SOURCE keys are an error, handled above)
-    updated = target.select(*keys).join(source, on=keys, how="inner").select(
-        *target.columns
+    # A row carrying the marker came from the source (update or
+    # insert), else it is an untouched target row. Each duplicate-key
+    # target row pairs with every matching source row: one updated copy
+    # per pair (SQL MERGE preserves target multiplicity).
+    matched = _qcol("s", MERGE_MARKER).isNotNull()
+    joined = target.alias("t").join(
+        source.withColumn(MERGE_MARKER, F.lit(True)).alias("s"),
+        on=[_qcol("t", k) == _qcol("s", k) for k in keys],
+        how="full_outer",
     )
-    inserts = source.join(target.select(*keys), on=keys, how="left_anti")
-    return untouched_target.unionByName(updated).unionByName(inserts)
+    return joined.select(*[
+        F.when(matched, _qcol("s", c)).otherwise(_qcol("t", c)).alias(c)
+        for c in target.columns
+    ])
+
+
+def _qcol(alias: str, name: str):
+    """Column ``name`` of the join side ``alias`` (backtick-escaped)."""
+    return F.col(f"{alias}.`{name.replace('`', '``')}`")
 
 
 # ------------------------------------------- partition-pruned merge ----
@@ -173,6 +190,7 @@ def merge_upsert_bucketed(
     import uuid
 
     from python_tool_setup_spark.sources.fs import (
+        delete_path,
         list_files,
         path_exists,
         replace_dir,
@@ -186,9 +204,7 @@ def merge_upsert_bucketed(
 
     keys = list(keys)
     src = source.withColumn(BUCKET_COL, bucket_of(keys, num_buckets))
-    touched = sorted(
-        r[0] for r in src.select(BUCKET_COL).distinct().collect()
-    )
+    touched = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
     read_state = {b: _fingerprint(b) for b in touched}
     existing = [b for b in touched if read_state[b] is not None]
     if existing:
@@ -204,15 +220,11 @@ def merge_upsert_bucketed(
     else:
         merged = src
         if source_dedup_order is not None:
-            from python_tool_setup_spark.operators.relational import dedup_by_keys
-
             merged = dedup_by_keys(merged, keys, source_dedup_order)
     staging = f"{target_path.rstrip('/')}__mstage_{uuid.uuid4().hex[:8]}"
     merged.write.partitionBy(BUCKET_COL).mode("overwrite").format(fmt).save(staging)
     if on_staged is not None:
         on_staged()
-    from python_tool_setup_spark.sources.fs import delete_path
-
     conflicts = [b for b in touched if _fingerprint(b) != read_state[b]]
     if conflicts:
         delete_path(spark, staging)
@@ -221,11 +233,8 @@ def merge_upsert_bucketed(
             "another writer committed first — re-run the merge"
         )
     for b in touched:
-        replace_dir(
-            spark,
-            f"{staging}/{BUCKET_COL}={b}",
-            f"{target_path}/{BUCKET_COL}={b}",
-        )
+        bdir = f"{BUCKET_COL}={b}"
+        replace_dir(spark, f"{staging}/{bdir}", f"{target_path}/{bdir}")
     delete_path(spark, staging)
     return touched
 
@@ -249,11 +258,11 @@ def merge_apply_cdc(
     :func:`merge_upsert`, and deletes REMOVE matching target rows —
     the whenMatchedDelete arm a plain upsert merge lacks.
 
-    One window (if compaction is needed) + the same two hash joins as
-    merge_upsert: anti-join keeps target rows whose key has no change,
-    surviving upserts append. O(target + changes) with shuffles only
-    on the merge key — CDC volume, not table size, drives the cost of
-    a typical incremental apply.
+    One window (if compaction is needed) + one anti-join on the merge
+    keys, which keeps target rows whose key has no change; surviving
+    upserts are appended. O(target + changes) with shuffles only on the
+    merge key — CDC volume, not table size, drives the cost of a
+    typical incremental apply.
 
     Op validation is LAZY: unknown or NULL ops abort the apply when
     the returned plan first executes (Spark raises a
@@ -263,19 +272,11 @@ def merge_apply_cdc(
     Callers quarantining bad batches must catch around the ACTION
     (write/collect), not around this call.
     """
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
-
     keys = list(keys)
-    # Fail fast on unknown or NULL ops: the anti-join removes EVERY
-    # changed key from the target, so a typo'd op ('update', 'insert',
-    # ...) or a NULL op would otherwise behave as a silent delete.
-    # The validation RIDES the existing plan instead of running its
-    # own eager scan: every change row passes through raise_error-
-    # guarded projection, so the first bad op aborts the apply job
-    # itself with zero extra passes over `changes`.
-    op_ok = F.col(op_col).isNotNull() & F.col(op_col).isin(
-        "upsert", "delete"
-    )
+    # Fail on unknown or NULL ops: the anti-join removes EVERY changed
+    # key, so a typo'd or NULL op would otherwise be a silent delete.
+    # The raise_error guard rides the apply plan (no extra scan).
+    op_ok = F.col(op_col).isNotNull() & F.col(op_col).isin("upsert", "delete")
     changes = changes.withColumn(
         op_col,
         F.when(op_ok, F.col(op_col)).otherwise(
@@ -292,10 +293,6 @@ def merge_apply_cdc(
     )
     if order_col is not None:
         changes = dedup_by_keys(changes, keys, [F.col(order_col).desc()])
-    untouched = target.join(
-        changes.select(*keys), on=keys, how="left_anti"
-    )
-    upserts = changes.filter(F.col(op_col) == "upsert").select(
-        *target.columns
-    )
+    untouched = target.join(changes.select(*keys), on=keys, how="left_anti")
+    upserts = changes.filter(F.col(op_col) == "upsert").select(*target.columns)
     return untouched.unionByName(upserts)

@@ -234,6 +234,57 @@ def test_merge_managed_table(spark, src_dir):
     assert len(got) == 1 and got[0]["reading_ts"] == "t2"
 
 
+def test_merge_into_partitioned_registered_table(spark, src_dir, tmp_path):
+    # the lakehouse CDC shape: partition_by + table + target_path, then
+    # two merges; the registered table must show every update/insert
+    spark.sql("DROP TABLE IF EXISTS mergedb.orders_cdc")
+    target = str(tmp_path / "orders")
+
+    def run(src, records):
+        write_json(f"{src}/batch.json", records)
+        make_ingestion(
+            spark,
+            IngestionConfig(
+                source_path=src,
+                source_format="json",
+                database="mergedb",
+                table="orders_cdc",
+                target_path=target,
+                partition_by=["day"],
+                write_mode="merge",
+                merge_keys=["id"],
+            ),
+        ).run()
+        rows = spark.table("mergedb.orders_cdc").collect()
+        assert len(rows) == len({r["id"] for r in rows})  # keys unique
+        return {r["id"]: (r["day"], r["amt"]) for r in rows}
+
+    base = [{"id": i, "day": f"d{i % 2}", "amt": i} for i in range(4)]
+    assert run(src_dir, base) == {i: (f"d{i % 2}", i) for i in range(4)}
+    got = run(
+        str(tmp_path / "m1"),
+        [
+            {"id": 1, "day": "d1", "amt": 10},  # update in place
+            {"id": 2, "day": "d1", "amt": 20},  # update moves partition
+            {"id": 4, "day": "d2", "amt": 4},  # insert, new partition
+        ],
+    )
+    assert got == {
+        0: ("d0", 0), 1: ("d1", 10), 2: ("d1", 20), 3: ("d1", 3), 4: ("d2", 4)
+    }
+    got = run(
+        str(tmp_path / "m2"),
+        [{"id": 0, "day": "d0", "amt": 100}, {"id": 5, "day": "d0", "amt": 5}],
+    )
+    assert got == {
+        0: ("d0", 100), 1: ("d1", 10), 2: ("d1", 20), 3: ("d1", 3),
+        4: ("d2", 4), 5: ("d0", 5),
+    }
+    assert {p for p in os.listdir(target) if p.startswith("day=")} == {
+        "day=d0", "day=d1", "day=d2"
+    }
+
+
 # ---------------------------------------------------- latest-file (S12) ----
 def test_latest_file_selection(spark, tmp_path):
     d = str(tmp_path / "files")

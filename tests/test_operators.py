@@ -70,6 +70,41 @@ def test_merge_duplicate_source_dedup_order(spark):
     assert rows(out) == [(1, "new", 2)]
 
 
+def test_merge_plan_is_one_join_one_scan_per_input(spark, tmp_path):
+    # the upsert is ONE full outer join: each input relation is read
+    # once (no anti-join/inner-join/anti-join triple scan)
+    import re
+
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(
+        str(tmp_path / "tgt")
+    )
+    spark.createDataFrame([(2, "B"), (3, "C")], "k int, v string").write.parquet(
+        str(tmp_path / "src")
+    )
+    out = ops.merge_upsert(
+        spark.read.parquet(str(tmp_path / "tgt")),
+        spark.read.parquet(str(tmp_path / "src")),
+        keys=["k"],
+    )
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert len(re.findall(r"^[\s:+-]*Join ", plan.toString(), re.M)) == 1, plan
+    leaves = plan.collectLeaves()  # LogicalRelation per parquet read
+    scans = sorted(
+        leaves.apply(i).relation().location().rootPaths().apply(0).getName()
+        for i in range(leaves.size())
+    )
+    assert scans == ["src", "tgt"], scans
+    assert rows(out) == [(1, "a"), (2, "B"), (3, "C")]
+
+
+def test_merge_rejects_reserved_marker_column(spark):
+    from python_tool_setup_spark.operators.merge import MERGE_MARKER
+
+    target = spark.createDataFrame([(1, True)], f"k int, {MERGE_MARKER} boolean")
+    with pytest.raises(MergeKeyError, match="reserved"):
+        ops.merge_upsert(target, target, keys=["k"])
+
+
 def test_merge_idempotent(spark):
     # merge(merge(T,S),S) == merge(T,S)  (property from SURVEY.md §5.4)
     target = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")

@@ -61,6 +61,24 @@ def test_merge_matches_reference_semantics(spark, target, source):
     assert got == Counter(expect)
 
 
+@SETTINGS
+@given(target=multiset, source=multiset)
+def test_merge_duplicate_source_keys_multiply_matches(spark, target, source):
+    # no dedup: each target row becomes one updated copy per matching
+    # source row (or stays as-is with no match); source rows whose key
+    # is null or absent from the target are inserted
+    from collections import Counter
+
+    got = _bag(merge_upsert(_df(spark, target), _df(spark, source), ["k"]))
+    expect = Counter()
+    for k, v in target:
+        hits = [(k, sv) for sk, sv in source if k is not None and sk == k]
+        expect.update(hits or [(k, v)])
+    tkeys = {k for k, _ in target if k is not None}
+    expect.update((k, v) for k, v in source if k is None or k not in tkeys)
+    assert got == expect
+
+
 nonnull_table = st.lists(
     st.tuples(st.integers(min_value=0, max_value=5), vals),
     max_size=6,
